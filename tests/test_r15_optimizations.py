@@ -8,8 +8,9 @@ fails here with a named culprit instead of as an opaque oracle mismatch:
 
 - the codegen'd overlapping-regex n-gram/shingle pass vs the interpreted
   ``transform(sequence(...), element_at...)`` higher-order lambda it
-  replaced (llm_dedup._word_ngram_hashes, the text_bigram_lm/
-  bpe_merge_candidates bigram arm, dedup_ngram_crossdoc's 5-gram arm);
+  replaced (the contamination 4-gram keys built from functions/text.py's
+  word_ngrams, the text_bigram_lm/bpe_merge_candidates bigram arm,
+  dedup_ngram_crossdoc's 5-gram arm);
 - ``_dvec``'s array cast vs the elementwise-cast lambda;
 - ``propagate_min_labels``'s label-sum convergence test vs the old
   join-based changed-row count (same labels, same round count).
@@ -28,12 +29,13 @@ def _docs(spark, sf_dir):
 
 
 def test_word_ngram_hash_regex_matches_hof(spark, sf_dir):
-    """_word_ngram_hashes (regex pass + xxhash64 of the space-joined gram)
-    emits the same per-doc distinct shingle SET as the old per-tuple
-    multi-arg xxhash64 HOF — compared via the gram STRINGS both formulations
-    hash (the hash value itself legitimately differs: joined-string vs
-    multi-arg keys are both valid 64-bit keys)."""
-    from wri_data_processing_spark.queries.llm_dedup import _word_ngram_hashes
+    """The contamination 4-gram keys (word_ngrams regex pass + xxhash64 of
+    the space-joined gram, as contamination_flag and corpus_prep_pipeline
+    build them) emit the same per-doc distinct shingle SET as the old
+    per-tuple multi-arg xxhash64 HOF — compared via the gram STRINGS both
+    formulations hash (the hash value itself legitimately differs:
+    joined-string vs multi-arg keys are both valid 64-bit keys)."""
+    from wri_data_processing_spark.functions.text import joined_tokens, tokens, word_ngrams
 
     d = _docs(spark, sf_dir)
     n = 4
@@ -52,7 +54,12 @@ def test_word_ngram_hash_regex_matches_hof(spark, sf_dir):
         .select("doc_id", F.explode_outer(F.array_distinct(sh)).alias("g"))
         .select("doc_id", F.xxhash64("g").alias("shingle"))
     )
-    new = _word_ngram_hashes(d, n, "doc_id")
+    grams = F.array_distinct(word_ngrams(joined_tokens("text"), n))
+    new = (
+        d.filter(F.size(tokens("text")) >= n)
+        .select("doc_id", F.explode_outer(grams).alias("_sh"))
+        .select("doc_id", F.xxhash64("_sh").alias("shingle"))
+    )
     assert new.exceptAll(old).count() == 0
     assert old.exceptAll(new).count() == 0
 

@@ -98,14 +98,14 @@ def _assert_same(spark, words, rounds=5, rewrite_last=True):
     assert fin_new == fin_old
 
 
-def test_bpe_fold_matches_sequential_on_real_corpus(spark, sf_dir=None):
+def test_bpe_fold_matches_sequential_on_real_corpus(spark, sf_dir):
     """Real testdata words (sf0.001 vocabulary): the fold certificate fires
     on this distribution (probed), so this replays the FOLDED path against
     the sequential loop end to end."""
     from wri_data_processing_spark.catalog import table
     from wri_data_processing_spark.queries.llm_pipeline import _bpe_word_syms
 
-    d = table(spark, "/root/testdata/sf0.001", "documents")
+    d = table(spark, sf_dir, "documents")
     syms = _bpe_word_syms(d)
     m_new, s_new = _bpe_loop(syms, 5, rewrite_last=True)
     m_old, s_old = _sequential_bpe(syms, 5, rewrite_last=True)
@@ -127,9 +127,13 @@ def test_bpe_fold_certificate_rejects_destroyable_runnerup(spark):
 def test_bpe_fold_certificate_handles_self_pair(spark):
     """(x, x) winner: merging 'xx' destroys/creates pairs on both sides;
     the destroyable test (right == left of winner) catches it and the
-    trajectories agree."""
+    trajectories agree. The second corpus is the case that test alone
+    misses: (a, a) wins at 300, and merging it CREATES (aa, aa) at 100,
+    above the non-destroyable runner-up (x, y) at 60 — a self-pair winner
+    must never fold."""
     words = [("xxxx", 50), ("xxy", 20), ("ab", 60), ("cd", 41)]
     _assert_same(spark, words, rounds=3)
+    _assert_same(spark, [("aaaa", 100), ("xy", 60)], rounds=3)
 
 
 def test_bpe_fold_certificate_handles_merged_symbol_reuse(spark):

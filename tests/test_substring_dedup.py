@@ -41,13 +41,13 @@ def _py_window_coverage(docs: dict[int, str]) -> dict[int, tuple[int, int]]:
     }
 
 
-def _py_winnow_coverage(docs: dict[int, str]) -> dict[int, tuple[int, int]]:
+def _py_winnow_coverage(docs: dict[int, str], w: int = W) -> dict[int, tuple[int, int]]:
     fps = {}
     for d, t in docs.items():
-        if len(t) < K + W - 1:
+        if len(t) < K + w - 1:
             continue
         hs = _py_windows(t)
-        mins = {min(hs[j : j + W]) for j in range(len(hs) - W + 1)}
+        mins = {min(hs[j : j + w]) for j in range(len(hs) - w + 1)}
         fps[d] = mins
     owners: dict[str, set[int]] = {}
     for d, mins in fps.items():
@@ -115,6 +115,14 @@ def test_winnow_guarantee_at_floor_and_volume_cut(spark):
     }
     for d in docs:
         assert got[d][0] < wins[d] / 2
+    # w == 1: each window is its own minimum, so the fingerprints are the
+    # distinct windows (a one-argument least() must not reach the plan).
+    got1 = {
+        r["doc_id"]: (r["n_fingerprints"], r["n_dup_fingerprints"])
+        for r in winnow_fingerprint_coverage(df, K, 1).collect()
+    }
+    assert got1 == _py_winnow_coverage(docs, 1)
+    assert got1[1][1] >= 1 and got1[2][1] >= 1
 
 
 def test_winnow_positionally_shifted_span_still_detected(spark):

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wri_data_processing_spark.catalog import table
+from wri_data_processing_spark.functions.text import salted_key, uniform30
 from wri_data_processing_spark.queries.llm_similarity import _dvec, cosine
 from wri_data_processing_spark.queries.llm_text import (
     _MARKERS,
@@ -190,20 +191,7 @@ def _score_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     (stats_calibration_bins' frame verbatim: u in [0, 2^30), y in {0,1})."""
     e = table(spark, sf_dir, "events")
     return e.select(
-        (
-            F.conv(
-                F.substring(
-                    F.sha2(
-                        F.concat(F.lit("cal:"), F.col("event_id").cast("string")), 256
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % F.lit(_Q30).cast("long")
-        ).alias("u"),
+        uniform30(salted_key("cal:", "event_id")).alias("u"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
     )
 
@@ -734,20 +722,7 @@ def eval_auc_delong(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     rows = e.select(
         (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("sa"),
-        (
-            F.conv(
-                F.substring(
-                    F.sha2(
-                        F.concat(F.lit("cal:"), F.col("event_id").cast("string")), 256
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % F.lit(_Q30).cast("long")
-        ).alias("sb"),
+        uniform30(salted_key("cal:", "event_id")).alias("sb"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
     ).localCheckpoint()  # feeds two rank subplans + the joined fold
 

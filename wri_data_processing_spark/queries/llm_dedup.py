@@ -28,6 +28,13 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wri_data_processing_spark.catalog import table
+from wri_data_processing_spark.functions.text import (
+    joined_tokens,
+    sha16,
+    sha60,
+    tokens,
+    word_ngrams,
+)
 from wri_data_processing_spark.registry import query
 
 # Threshold kept as an exact rational (3/5) so the pair-generation length
@@ -157,39 +164,9 @@ def _shingle_arrays(d: DataFrame, n: int = 3) -> DataFrame:
     # A small input can arrive as ONE file split; spread it across all
     # cores before the regex so it parallelizes. At real scale the scan
     # already has many splits and this exchange is dwarfed by the explode.
-    d2 = _spread_small_scan(d).filter(
-        F.size(F.split(F.trim(F.col("text")), r"\s+")) >= n
-    )
-    norm = F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")
-    pat = r"(?<=^|\s)(?=(" + " ".join([r"\S+"] * n) + r"))"
-    arr = F.regexp_extract_all(norm, F.lit(pat), 1)
+    d2 = _spread_small_scan(d).filter(F.size(tokens("text")) >= n)
+    arr = word_ngrams(joined_tokens("text"), n)
     return d2.select("doc_id", F.array_distinct(arr).alias("shingles"))
-
-
-def _word_ngram_hashes(d: DataFrame, n: int, *keep: str) -> DataFrame:
-    """Distinct word n-gram xxhash64 keys per row: (*keep, shingle: long).
-
-    The codegen'd regex construction of _shingle_arrays (normalize
-    whitespace, overlapping lookahead captures) generalized to carry
-    arbitrary passenger columns, for consumers that shingle with context
-    (contamination_flag keeps ``source``; corpus_prep_pipeline keeps
-    ``doc_id``). Replaces the interpreted F.transform(F.sequence, ...)
-    higher-order lambda those ops carried — the same hot spot the r15 build
-    round measured at 8x on the 3-gram path. Hashing the space-joined
-    shingle STRING instead of the chained multi-arg xxhash64 changes only
-    internal join-key values (tokens cannot contain spaces, so the join is
-    equivalent up to the 64-bit collision bound both formulations already
-    accept). No _spread_small_scan here: both consumers run the shingling
-    inside larger compositions where the input is either already shuffled
-    or filtered scan-stage work.
-    """
-    d2 = d.filter(F.size(F.split(F.trim(F.col("text")), r"\s+")) >= n)
-    norm = F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")
-    pat = r"(?<=^|\s)(?=(" + " ".join([r"\S+"] * n) + r"))"
-    arr = F.array_distinct(F.regexp_extract_all(norm, F.lit(pat), 1))
-    return d2.select(*keep, F.explode_outer(arr).alias("_sh")).select(
-        *keep, F.xxhash64("_sh").alias("shingle")
-    )
 
 
 def _shingles_hashed(d: DataFrame, n: int = 3) -> DataFrame:
@@ -404,8 +381,7 @@ def _minhash_oracle() -> str:
 
 def _minhash_base_h(shingle_col: str) -> Column:
     """The MinHash base hash: first 60 bits of sha256(shingle) mod P."""
-    base = F.conv(F.substring(F.sha2(shingle_col, 256), 1, 15), 16, 10).cast("long")
-    return base % _MINHASH_P
+    return sha60(shingle_col) % _MINHASH_P
 
 
 def _minhash_pairs_from_reps(reps: DataFrame) -> DataFrame:
@@ -797,8 +773,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded self-join a plain equi-join downstream.
     """
     d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("tok"))
-    h = F.conv(F.substring(F.sha2("tok", 256), 1, 15), 16, 10).cast("long")
+    toks = d.select("doc_id", F.explode(tokens("text")).alias("tok"))
+    h = sha60("tok")
     bit_sums = toks.groupBy("doc_id").agg(
         *[
             F.sum(
@@ -1647,9 +1623,7 @@ def substring_window_coverage(d: DataFrame, k: int) -> DataFrame:
         )
         .select(
             "doc_id",
-            F.substring(
-                F.sha2(F.col("text").substr(F.col("i"), F.lit(k)), 256), 1, 16
-            ).alias("wh"),
+            sha16(F.col("text").substr(F.col("i"), F.lit(k))).alias("wh"),
         )
     )
     # r16 (guide §2.3 "aggregate before you shuffle"): the dup predicate only
@@ -1727,7 +1701,7 @@ def winnow_fingerprint_coverage(d: DataFrame, k: int, w: int) -> DataFrame:
     d = d.filter(F.length("text") >= k + w - 1)
     hs = F.transform(
         F.sequence(F.lit(1), F.length("text") - (k - 1)),
-        lambda i: F.substring(F.sha2(F.col("text").substr(i, F.lit(k)), 256), 1, 16),
+        lambda i: sha16(F.col("text").substr(i, F.lit(k))),
     )
     # r16 (guide §4.1, the r15 slice-HOF finding): array_min(slice(hs, j, w))
     # allocated a fresh w-element array per window position inside the
@@ -1737,7 +1711,12 @@ def winnow_fingerprint_coverage(d: DataFrame, k: int, w: int) -> DataFrame:
     # nulls, so least == array_min) with ZERO allocation per position. w is
     # a compile-time constant (8), so the unrolled least stays tiny — far
     # under the 64 KB/JIT limits the r15 unroll rejection hit at 64 wide,
-    # and inside an interpreted lambda it is w child evals either way.
+    # and inside an interpreted lambda it is w child evals either way. At
+    # w == 1 the window minimum is the element itself (least() needs >= 2).
+    def window_min(j: Column) -> Column:
+        reads = [F.element_at("hs", j + off) for off in range(w)]
+        return reads[0] if w == 1 else F.least(*reads)
+
     fps = (
         _spread_small_scan(d)
         .select("doc_id", hs.alias("hs"))
@@ -1747,9 +1726,7 @@ def winnow_fingerprint_coverage(d: DataFrame, k: int, w: int) -> DataFrame:
                 F.array_distinct(
                     F.transform(
                         F.sequence(F.lit(1), F.size("hs") - (w - 1)),
-                        lambda j: F.least(
-                            *[F.element_at("hs", j + off) for off in range(w)]
-                        ),
+                        window_min,
                     )
                 )
             ).alias("fp"),
@@ -1848,9 +1825,7 @@ def substring_dup_spans(d: DataFrame, k: int) -> DataFrame:
         .select(
             "doc_id",
             F.col("i").cast("long").alias("i"),
-            F.substring(
-                F.sha2(F.col("text").substr(F.col("i"), F.lit(k)), 256), 1, 16
-            ).alias("wh"),
+            sha16(F.col("text").substr(F.col("i"), F.lit(k))).alias("wh"),
         )
     )
     # min != max is the same ">= 2 distinct docs" predicate as a one-phase

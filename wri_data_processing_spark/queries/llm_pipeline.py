@@ -23,6 +23,18 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wri_data_processing_spark.catalog import table
+from wri_data_processing_spark.functions.text import (
+    joined_tokens,
+    pair_split,
+    salted_key,
+    sha16,
+    sha60,
+    tagged_char_ngrams,
+    tagged_word_ngrams,
+    tokens,
+    uniform30,
+    word_ngrams,
+)
 from wri_data_processing_spark.registry import query
 
 _TOKS_CTE = r"""
@@ -34,9 +46,7 @@ _TOKS_CTE = r"""
 
 def _tokens(d: DataFrame) -> DataFrame:
     """(doc_id, tok) one row per token occurrence."""
-    return d.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok")
-    )
+    return d.select("doc_id", F.explode(tokens("text")).alias("tok"))
 
 
 @query(
@@ -114,13 +124,13 @@ def contamination_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan. Shingles are compared as xxhash64 longs; the string oracle is
     identical up to 64-bit hash collisions.
     """
-    from wri_data_processing_spark.queries.llm_dedup import _word_ngram_hashes
-
     d = table(spark, sf_dir, "documents")
-    # r15: one codegen'd regex pass builds the distinct 4-gram keys (see
-    # _word_ngram_hashes) — the interpreted transform/sequence/element_at
-    # lambda this op carried was the measured hot-spot class.
-    shingles = _word_ngram_hashes(d, 4, "doc_id", "source")
+    grams = F.array_distinct(word_ngrams(joined_tokens("text"), 4))
+    shingles = (
+        d.filter(F.size(tokens("text")) >= 4)
+        .select("doc_id", "source", F.explode_outer(grams).alias("_sh"))
+        .select("doc_id", "source", F.xxhash64("_sh").alias("shingle"))
+    )
     bench = shingles.filter(F.col("source") == "src0").select("shingle").distinct()
     hits = (
         shingles.filter(F.col("source") != "src0")
@@ -271,7 +281,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact for any corpus below 2^53 tokens per source.
     """
     d = table(spark, sf_dir, "documents")
-    n_tok = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    n_tok = F.size(tokens("text"))
     w = (
         Window.partitionBy("source")
         .orderBy("doc_id")
@@ -372,7 +382,7 @@ def sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = table(spark, sf_dir, "documents")
     text = F.col("text")
-    n_tok = F.size(F.split(F.trim(text), r"\s+"))
+    n_tok = F.size(tokens(text))
     density = (
         F.length(F.regexp_replace(text, " ", "")) * F.lit(1.0)
         / F.greatest(F.length(text), F.lit(1))
@@ -523,7 +533,7 @@ def text_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the sim_topk_batch shape).
     """
     d = table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = tokens("text")
     def _eq(term):
         # NB: a 2-arg lambda (x, t=term) would make F.filter pass the
         # ELEMENT INDEX as the second argument — close over the term.
@@ -677,7 +687,7 @@ def text_bm25_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant because distinct terms here are bounded (8).
     """
     d = table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = tokens("text")
 
     def _eq(term):
         # Close over the term: a 2-arg lambda would receive the element
@@ -892,45 +902,19 @@ def _pair_ngram_counts(spark: SparkSession, sf_dir: str, ks: tuple) -> DataFrame
     base = _spread_small_scan(d).select(
         F.floor(F.col("doc_id") / 2).cast("long").alias("pair"),
         (F.col("doc_id") % 2).cast("int").alias("side"),
-        F.split(F.trim(F.col("text")), r"\s+").alias("toks"),
+        tokens("text").alias("toks"),
     )
 
-    # r15: gram STRING construction for k >= 2 moves to the codegen'd
-    # overlapping-regex pass over the space-rejoined token stream (the
-    # _shingle_arrays construction, multiplicity-preserving: no distinct) —
-    # same strings, same order, same count as the old interpreted
-    # transform/element_at/concat_ws lambda. Unigrams stay the token array
-    # ITSELF (zero construction) — this also preserves the engine/oracle
-    # convention that a whitespace-only doc tokenizes as [''] and counts
-    # one unigram, which a \S+-based regex would drop. The k >= 2 arms are
-    # unaffected by that edge case: such docs have size(toks) == 1 and take
-    # the empty-array guard.
-    def _ngrams(k: int):
-        if k == 1:
-            grams = F.col("toks")
-        else:
-            norm = F.array_join("toks", " ")
-            pat = r"(?<=^|\s)(?=(" + " ".join([r"\S+"] * k) + r"))"
-            grams = F.regexp_extract_all(norm, F.lit(pat), 1)
-        arr = F.transform(
-            grams, lambda g: F.struct(F.lit(k).alias("n"), g.alias("g"))
-        )
-        return F.when(F.size("toks") >= k, arr).otherwise(
-            F.array().cast("array<struct<n:int,g:string>>")
-        )
-
+    # Gram strings come from the codegen'd overlapping-regex pass over the
+    # space-rejoined token stream (multiplicity-preserving); unigrams are
+    # the token array itself, keeping the [''] whitespace-only-doc unigram
+    # (functions/text.py states the conventions).
+    tagged = [tagged_word_ngrams("toks", k) for k in ks]
     g = base.select(
         "pair",
         "side",
-        F.explode(F.flatten(F.array(*[_ngrams(k) for k in ks]))).alias("ng"),
-    ).select(
-        "pair",
-        "side",
-        F.col("ng.n").alias("n"),
-        F.conv(F.substring(F.sha2(F.col("ng.g"), 256), 1, 15), 16, 10)
-        .cast("long")
-        .alias("h"),
-    )
+        F.explode(F.flatten(F.array(*tagged))).alias("ng"),
+    ).select("pair", "side", F.col("ng.n").alias("n"), sha60(F.col("ng.g")).alias("h"))
     return g.groupBy("pair", "n", "h").agg(
         F.sum(F.when(F.col("side") == 1, 1).otherwise(0)).cast("long").alias("c_cnt"),
         F.sum(F.when(F.col("side") == 0, 1).otherwise(0)).cast("long").alias("r_cnt"),
@@ -1173,33 +1157,12 @@ def _pair_chargram_counts(spark: SparkSession, sf_dir: str, ks: tuple) -> DataFr
         F.regexp_replace(F.col("text"), r"\s+", "").alias("s"),
     )
 
-    def _grams(k: int):
-        # r15: overlapping char k-grams via ONE codegen'd regex pass ((?s)
-        # so '.' crosses the line separators \s+ doesn't strip) — every
-        # position 1..len-k+1 in order with multiplicity, identical to the
-        # old interpreted transform/substr lambda.
-        grams = F.regexp_extract_all(
-            F.col("s"), F.lit(r"(?s)(?=(" + "." * k + r"))"), 1
-        )
-        arr = F.transform(
-            grams, lambda g: F.struct(F.lit(k).alias("n"), g.alias("g"))
-        )
-        return F.when(F.length("s") >= k, arr).otherwise(
-            F.array().cast("array<struct<n:int,g:string>>")
-        )
-
+    tagged = [tagged_char_ngrams("s", k) for k in ks]
     g = base.select(
         "pair",
         "side",
-        F.explode(F.flatten(F.array(*[_grams(k) for k in ks]))).alias("ng"),
-    ).select(
-        "pair",
-        "side",
-        F.col("ng.n").alias("n"),
-        F.conv(F.substring(F.sha2(F.col("ng.g"), 256), 1, 15), 16, 10)
-        .cast("long")
-        .alias("h"),
-    )
+        F.explode(F.flatten(F.array(*tagged))).alias("ng"),
+    ).select("pair", "side", F.col("ng.n").alias("n"), sha60(F.col("ng.g")).alias("h"))
     return g.groupBy("pair", "n", "h").agg(
         F.sum(F.when(F.col("side") == 1, 1).otherwise(0)).cast("long").alias("c_cnt"),
         F.sum(F.when(F.col("side") == 0, 1).otherwise(0)).cast("long").alias("r_cnt"),
@@ -1524,34 +1487,13 @@ def eval_distinct_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wri_data_processing_spark.queries.llm_dedup import _spread_small_scan
 
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 1)
-    base = _spread_small_scan(d).select(
-        F.split(F.trim(F.col("text")), r"\s+").alias("toks")
-    )
+    base = _spread_small_scan(d).select(tokens("text").alias("toks"))
 
-    # r15: same regex gram construction as _pair_ngram_counts — unigrams
-    # are the token array itself (preserving the [''] empty-doc token
-    # convention), bigrams come from the codegen'd overlapping-regex pass.
-    def _ngrams(k: int):
-        if k == 1:
-            grams = F.col("toks")
-        else:
-            norm = F.array_join("toks", " ")
-            pat = r"(?<=^|\s)(?=(" + " ".join([r"\S+"] * k) + r"))"
-            grams = F.regexp_extract_all(norm, F.lit(pat), 1)
-        arr = F.transform(
-            grams, lambda g: F.struct(F.lit(k).alias("n"), g.alias("g"))
-        )
-        return F.when(F.size("toks") >= k, arr).otherwise(
-            F.array().cast("array<struct<n:int,g:string>>")
-        )
-
-    g = base.select(
-        F.explode(F.flatten(F.array(_ngrams(1), _ngrams(2)))).alias("ng")
-    ).select(
-        F.col("ng.n").alias("n"),
-        F.conv(F.substring(F.sha2(F.col("ng.g"), 256), 1, 15), 16, 10)
-        .cast("long")
-        .alias("h"),
+    # Same gram construction as _pair_ngram_counts (unigrams keep the ['']
+    # whitespace-only-doc token).
+    tagged = [tagged_word_ngrams("toks", k) for k in (1, 2)]
+    g = base.select(F.explode(F.flatten(F.array(*tagged))).alias("ng")).select(
+        F.col("ng.n").alias("n"), sha60(F.col("ng.g")).alias("h")
     )
     f = g.agg(
         F.countDistinct(F.when(F.col("n") == 1, F.col("h"))).cast("long").alias("d1"),
@@ -1664,10 +1606,11 @@ def eval_cer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r16 (guide §1.2: don't compute what you can prove): levenshtein(x, x)
     # is 0 by definition, so identical pairs — common in real eval corpora
-    # (unchanged transcriptions) and present in testdata — skip the
-    # O(|cand|*|ref|) DP behind a codegen'd equality check. The equality
-    # scan is O(min(len)) with early exit; the non-equal branch is the
-    # exact same built-in as before, so every emitted integer is unchanged.
+    # (unchanged transcriptions), though the testdata has none (0 of 2,500
+    # pairs, OPTIMIZATION_r16.md) — skip the O(|cand|*|ref|) DP behind a
+    # codegen'd equality check. The equality scan is O(min(len)) with early
+    # exit; the non-equal branch is the exact same built-in as before, so
+    # every emitted integer is unchanged.
     e = p.select(
         F.when(F.col("cand") == F.col("ref"), F.lit(0))
         .otherwise(F.levenshtein("cand", "ref"))
@@ -1746,18 +1689,15 @@ def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     after each merge (same plan shape every round).
     """
     d = table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = tokens("text")
     t = d.select("doc_id", toks.alias("toks")).filter(F.size("toks") >= 2)
     # r15: adjacent pairs via the codegen'd overlapping-regex pass (the
     # text_bigram_lm construction) instead of the interpreted transform/
     # element_at struct lambda — identical pair multiset and order.
-    bgarr = F.regexp_extract_all(
-        F.array_join("toks", " "), F.lit(r"(?<=^|\s)(?=(\S+ \S+))"), 1
-    )
+    bgarr = word_ngrams(F.array_join("toks", " "), 2)
+    left, right = pair_split("b")
     bg = t.select("doc_id", F.explode_outer(bgarr).alias("b")).select(
-        "doc_id",
-        F.substring_index("b", " ", 1).alias("left_tok"),
-        F.substring_index("b", " ", -1).alias("right_tok"),
+        "doc_id", left.alias("left_tok"), right.alias("right_tok")
     )
     return (
         bg.groupBy("left_tok", "right_tok")
@@ -1804,7 +1744,7 @@ def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     any window function.
     """
     d = table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = tokens("text")
     t = d.select("doc_id", toks.alias("toks"))
     starts = F.sequence(F.lit(1), F.size("toks"), F.lit(64))
     chunks = F.transform(
@@ -2045,14 +1985,13 @@ def corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wri_data_processing_spark.queries.llm_dedup import (
         _jaccard_pairs,
         _shingles_hashed,
-        _word_ngram_hashes,
         propagate_min_labels,
     )
     from wri_data_processing_spark.queries.llm_text import _PUNCT_RE
 
     d = table(spark, sf_dir, "documents")
     text = F.col("text")
-    n_tokens = F.size(F.split(F.trim(text), r"\s+"))
+    n_tokens = F.size(tokens(text))
     n_chars = F.length(text)
     punct_ratio = (n_chars - F.length(F.regexp_replace(text, _PUNCT_RE, ""))) / F.greatest(
         n_chars, F.lit(1)
@@ -2090,16 +2029,21 @@ def corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rem = surv.join(nd_drop, "doc_id", "left_anti")
 
-    # r15: the 4-gram decontamination keys come from the codegen'd regex
-    # pass (_word_ngram_hashes) instead of the interpreted transform/
-    # sequence/element_at lambda — same distinct-shingle semantics, same
-    # collision caveat, one whole-stage-codegen'd projection per side.
+    # The 4-gram decontamination keys: xxhash64 of each distinct shingle
+    # string (the contamination_flag keys), one codegen'd projection per side.
+    grams = F.explode_outer(F.array_distinct(word_ngrams(joined_tokens("text"), 4)))
     bench = (
-        _word_ngram_hashes(d.filter(F.col("source") == "src0"), 4)
+        d.filter(F.col("source") == "src0")
+        .filter(F.size(tokens("text")) >= 4)
+        .select(grams.alias("_sh"))
+        .select(F.xxhash64("_sh").alias("shingle"))
         .distinct()
     )
     contam = (
-        _word_ngram_hashes(rem.select("doc_id", "text"), 4, "doc_id")
+        rem.select("doc_id", "text")
+        .filter(F.size(tokens("text")) >= 4)
+        .select("doc_id", grams.alias("_sh"))
+        .select("doc_id", F.xxhash64("_sh").alias("shingle"))
         .join(F.broadcast(bench), "shingle", "left_semi")
         .select("doc_id")
         .distinct()
@@ -2191,7 +2135,7 @@ def pack_sequences_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ranking.py pattern) without changing the output contract.
     """
     d = table(spark, sf_dir, "documents")
-    n_tok = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
+    n_tok = F.size(tokens("text")).cast("long")
     w = (
         Window.partitionBy("source")
         .orderBy("doc_id")
@@ -2451,7 +2395,7 @@ def packing_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.sum("seg_tok").cast("long").alias("kept_tok"))
     )
-    n_tok_in = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
+    n_tok_in = F.size(tokens("text")).cast("long")
     pm = (
         passed.join(kd, "doc_id", "left")
         .select("source", n_tok_in.alias("tok_in"), "kept_tok")
@@ -2540,7 +2484,7 @@ def pack_sequences_emit(spark: SparkSession, sf_dir: str) -> DataFrame:
     training-ready layout directly.
     """
     d = table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = tokens("text")
     w = (
         Window.partitionBy("source")
         .orderBy("doc_id")
@@ -3210,26 +3154,7 @@ def pack_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "epoch",
         "n_chars",
-        (
-            F.conv(
-                F.substring(
-                    F.sha2(
-                        F.concat(
-                            F.lit("ep:"),
-                            F.col("epoch").cast("string"),
-                            F.lit(":"),
-                            F.col("doc_id").cast("string"),
-                        ),
-                        256,
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % F.lit(1073741824).cast("long")
-        ).alias("u"),
+        uniform30(salted_key("ep:", "epoch", "doc_id")).alias("u"),
     )
     return (
         s.groupBy(
@@ -3393,18 +3318,7 @@ def stats_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     work: the 10-row self-join and a 1-row totals broadcast.
     """
     e = table(spark, sf_dir, "events")
-    u = (
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("lift:"), F.col("event_id").cast("string")), 256),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % F.lit(1073741824).cast("long")
-    )
+    u = uniform30(salted_key("lift:", "event_id"))
     s = e.select(
         u.alias("u"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("pos"),
@@ -3494,12 +3408,7 @@ def sample_class_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("cnt").cast("long").alias("target"))
     )
     w = Window.partitionBy("event_type").orderBy(
-        F.substring(
-            F.sha2(F.concat(F.lit("bal:"), F.col("event_id").cast("string")), 256),
-            1,
-            16,
-        ),
-        "event_id",
+        sha16(salted_key("bal:", "event_id")), "event_id"
     )
     r = e.select("event_type", "event_id").withColumn(
         "rn", F.row_number().over(w)
@@ -3643,7 +3552,7 @@ def _bpe_word_syms(d: DataFrame) -> DataFrame:
     checkpoints are), so the spread exchange only added stage boundaries.
     Left unspread, the text_bigram_lm lesson."""
     words = d.select(
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("word")
+        F.explode(tokens("text")).alias("word")
     ).filter(F.col("word") != "")
     w = words.groupBy("word").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     return w.select(
@@ -3693,7 +3602,10 @@ def _bpe_loop(
       left == b or right == a (an occurrence (x, y) dies iff one of its
       symbols is consumed, which needs y == a with b following, or x == b
       with a preceding), and only CREATES pairs involving the merged
-      symbol a||b, each with count <= some old (z, a)/(b, z) count;
+      symbol a||b, each with count <= some old (z, a)/(b, z) count — for a
+      self-pair winner (a == b) that bound is m1's own count, which the
+      collected head does not cover ('aaaa' creates (aa, aa)), so a
+      self-pair winner never folds;
     - multi-char symbols exist ONLY as previously accepted merges (the
       initial alphabet is single characters), so when a||b is 2+ chars and
       not a previous merge, NO pre-existing pair involves it and every
@@ -3722,17 +3634,12 @@ def _bpe_loop(
         # construction — words split on \s+, merges only concatenate), so
         # every round's pair-count scan is codegen instead of the
         # interpreted transform/element_at struct lambda.
-        bgarr = F.regexp_extract_all(
-            F.array_join("syms", " "), F.lit(r"(?<=^|\s)(?=(\S+ \S+))"), 1
-        )
+        bgarr = word_ngrams(F.array_join("syms", " "), 2)
+        left, right = pair_split("b")
         pc = (
             syms.filter(F.size("syms") >= 2)
             .select("cnt", F.explode_outer(bgarr).alias("b"))
-            .select(
-                "cnt",
-                F.substring_index("b", " ", 1).alias("left_tok"),
-                F.substring_index("b", " ", -1).alias("right_tok"),
-            )
+            .select("cnt", left.alias("left_tok"), right.alias("right_tok"))
             .groupBy("left_tok", "right_tok")
             .agg(F.sum("cnt").cast("long").alias("n_pairs"))
         )
@@ -3792,6 +3699,7 @@ def _bpe_loop(
             novel = (
                 len(m1.left_tok) > 0
                 and len(m1.right_tok) > 0
+                and m1.left_tok != m1.right_tok
                 and merged1 not in prev_merged
             )
             if (
@@ -3865,19 +3773,9 @@ def sample_ppswor(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample_reservoir_global plan shape with a weighted key).
     """
     o = table(spark, sf_dir, "orders")
-    u = (
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("pps:"), F.col("o_orderkey").cast("string")), 256),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % F.lit(1073741824).cast("long")
-        + 1
-    ).cast("double") / F.lit(1073741826.0)
+    u = (uniform30(salted_key("pps:", "o_orderkey")) + 1).cast("double") / F.lit(
+        1073741826.0
+    )
     key = -F.log(u) / F.col("o_totalprice").cast("double")
     return (
         o.select("o_orderkey", "o_totalprice", key.alias("key"))
@@ -3956,7 +3854,7 @@ def tokenizer_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     wl = (
         d.select(
             "lang",
-            F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("word"),
+            F.explode(tokens("text")).alias("word"),
         )
         .filter(F.col("word") != "")
         .groupBy("lang", "word")

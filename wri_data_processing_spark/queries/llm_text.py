@@ -19,6 +19,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wri_data_processing_spark.catalog import table
+from wri_data_processing_spark.functions.text import (
+    char_ngrams,
+    pair_split,
+    sha60,
+    tokens,
+    word_ngrams,
+)
 from wri_data_processing_spark.registry import query
 
 _PUNCT_RE = "[.,!?;:]"
@@ -61,7 +68,7 @@ def _ts_text_col() -> F.Column:
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").select("doc_id", _ts_text_col().alias("text"))
     text = F.col("text")
-    n_tokens = F.size(F.split(F.trim(text), r"\s+")).cast("long")
+    n_tokens = F.size(tokens(text)).cast("long")
     return d.select(
         "doc_id",
         F.length(text).cast("long").alias("n_chars_calc"),
@@ -193,7 +200,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite length/punctuation quality score in [0,1]."""
     d = table(spark, sf_dir, "documents")
     text = F.col("text")
-    n_tokens = F.size(F.split(F.trim(text), r"\s+"))
+    n_tokens = F.size(tokens(text))
     n_chars = F.length(text)
     punct_ratio = (n_chars - F.length(F.regexp_replace(text, _PUNCT_RE, ""))) / F.greatest(
         n_chars, F.lit(1)
@@ -304,7 +311,7 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = table(spark, sf_dir, "documents").filter(F.col("lang") == "en")
     text = F.col("text")
-    n_tokens = F.size(F.split(F.trim(text), r"\s+"))
+    n_tokens = F.size(tokens(text))
     n_chars = F.length(text)
     punct_ratio = (n_chars - F.length(F.regexp_replace(text, _PUNCT_RE, ""))) / F.greatest(
         n_chars, F.lit(1)
@@ -688,13 +695,10 @@ def text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # struct lambda — same (w1, w2) multiset in the same order, the measured
     # HOF-vs-regex hot-spot class. explode_outer keeps Catalyst from pushing
     # a non-empty-array constraint filter that would re-evaluate the regex.
-    bgarr = F.regexp_extract_all(
-        F.array_join("toks", " "), F.lit(r"(?<=^|\s)(?=(\S+ \S+))"), 1
-    )
+    bgarr = word_ngrams(F.array_join("toks", " "), 2)
+    w1, w2 = pair_split("b")
     bg = t.select("doc_id", F.explode_outer(bgarr).alias("b")).select(
-        "doc_id",
-        F.substring_index("b", " ", 1).alias("w1"),
-        F.substring_index("b", " ", -1).alias("w2"),
+        "doc_id", w1.alias("w1"), w2.alias("w2")
     )
     db = bg.groupBy("doc_id", "w1", "w2").agg(
         F.count(F.lit(1)).cast("long").alias("c_d")
@@ -818,7 +822,7 @@ def text_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
-        F.posexplode(F.split(F.trim("text"), r"\s+")).alias("i0", "tok"),
+        F.posexplode(tokens("text")).alias("i0", "tok"),
     )
     stop = F.col("tok").isin("the", "a")
     f = tok.select(
@@ -933,7 +937,7 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = table(spark, sf_dir, "documents")
     tf = (
-        docs.select(F.explode(F.split(F.trim("text"), r"\s+")).alias("tok"))
+        docs.select(F.explode(tokens("text")).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).cast("long").alias("f"))
     )
@@ -1039,7 +1043,7 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     mx = docs.agg((F.max("doc_id") + 1).cast("long").alias("nd"))
     tok = docs.select(
-        "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("tok")
+        "doc_id", F.explode(tokens("text")).alias("tok")
     )
     fs = tok.groupBy("tok").agg(F.min("doc_id").cast("long").alias("first_doc"))
     dec = (
@@ -1159,7 +1163,7 @@ def text_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = table(spark, sf_dir, "documents")
     tok = docs.select(
-        "source", F.explode(F.split(F.trim("text"), r"\s+")).alias("tok")
+        "source", F.explode(tokens("text")).alias("tok")
     )
     tf = tok.groupBy("source", "tok").agg(F.count(F.lit(1)).cast("long").alias("c"))
     n = tf.groupBy("source").agg(F.sum("c").cast("long").alias("n"))
@@ -1590,13 +1594,9 @@ def text_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r15: same codegen'd overlapping-regex bigram pass as text_bigram_lm
     # (identical (w1, w2) multiset/order; tokens are [a-z0-9]+ so the
     # space-join is unambiguous).
-    bgarr = F.regexp_extract_all(
-        F.array_join("toks", " "), F.lit(r"(?<=^|\s)(?=(\S+ \S+))"), 1
-    )
-    bg = t.select(F.explode_outer(bgarr).alias("b")).select(
-        F.substring_index("b", " ", 1).alias("w1"),
-        F.substring_index("b", " ", -1).alias("w2"),
-    )
+    bgarr = word_ngrams(F.array_join("toks", " "), 2)
+    w1, w2 = pair_split("b")
+    bg = t.select(F.explode_outer(bgarr).alias("b")).select(w1.alias("w1"), w2.alias("w2"))
     cb = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("long").alias("c12"))
     cb = cb.localCheckpoint()  # feeds cu, cont, tot and the term join
     cu = cb.groupBy("w1").agg(
@@ -1711,8 +1711,7 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def bucket_weight(i: F.Column) -> F.Column:
         ng = F.substr(text, i, F.lit(3))
-        h = F.conv(F.substring(F.sha2(ng, 256), 1, 15), 16, 10).cast("long")
-        return F.element_at(w_arr, (h % _QC_D + 1).cast("int"))
+        return F.element_at(w_arr, (sha60(ng) % _QC_D + 1).cast("int"))
 
     wsum = F.aggregate(
         F.sequence(F.lit(1), F.length(text) - 2),
@@ -1804,27 +1803,17 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.substring(F.md5("text"), 1, 1) <= "b", "train")
         .otherwise("holdout")
         .alias("split"),
-        F.split(F.trim(F.col("text")), r"\s+").alias("toks"),
+        tokens("text").alias("toks"),
     ).filter(F.size("toks") >= n)
     # r15: shingle strings via the codegen'd overlapping-regex pass
     # (identical strings/order to the old interpreted concat_ws lambda —
     # the _shingle_arrays construction).
-    sh = F.regexp_extract_all(
-        F.array_join("toks", " "),
-        F.lit(r"(?<=^|\s)(?=(" + " ".join([r"\S+"] * n) + r"))"),
-        1,
-    )
+    sh = word_ngrams(F.array_join("toks", " "), n)
     hs = d2.select(
         "source",
         "split",
         F.explode_outer(F.array_distinct(sh)).alias("shingle"),
-    ).select(
-        "source",
-        "split",
-        F.conv(F.substring(F.sha2("shingle", 256), 1, 15), 16, 10)
-        .cast("long")
-        .alias("h"),
-    )
+    ).select("source", "split", sha60("shingle").alias("h"))
     # r16 (guide §2.4 "remove shuffles outright", §1.2 "don't compute things
     # twice"): hs used to feed TWO branches (train-distinct, holdout-
     # distinct) that each re-ran the shingle + sha pass, then met in a
@@ -1928,11 +1917,7 @@ def _lid_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     text = F.col("text")
     bkts = F.transform(
         F.sequence(F.lit(1), F.length(text) - 2),
-        lambda i: (
-            F.conv(F.substring(F.sha2(F.substr(text, i, F.lit(3)), 256), 1, 15), 16, 10)
-            .cast("long")
-            % _LID_D
-        ).cast("int"),
+        lambda i: (sha60(F.substr(text, i, F.lit(3))) % _LID_D).cast("int"),
     )
     b = d.select("doc_id", "lang", "text", bkts.alias("bkts"))
 
@@ -1998,12 +1983,9 @@ def _lid_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _spread_small_scan(
         table(spark, sf_dir, "documents").filter(F.length("text") >= 3)
     )
-    tri = F.regexp_extract_all(F.col("text"), F.lit(r"(?s)(?=(...))"), 1)
+    tri = char_ngrams("text", 3)
     g = d.select("doc_id", "lang", F.explode(tri).alias("t"))
-    bkt = (
-        F.conv(F.substring(F.sha2(F.col("t"), 256), 1, 15), 16, 10).cast("long")
-        % _LID_D
-    ).cast("int")
+    bkt = (sha60("t") % _LID_D).cast("int")
     ws = {c: F.array(*[F.lit(w) for w in _LID_W[c]]) for c in _LID_CLASSES}
     s = (
         g.select("doc_id", "lang", bkt.alias("x"))
@@ -2343,7 +2325,7 @@ def text_mattr(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
     b = d.select(
         "doc_id",
-        F.split(F.trim("text"), r"\s+").alias("tk"),
+        tokens("text").alias("tk"),
     ).select(
         "doc_id",
         "tk",

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from wri_data_processing_spark.catalog import table
 from wri_data_processing_spark.functions import scalar as fn
+from wri_data_processing_spark.functions.text import sha16
 from wri_data_processing_spark.registry import query
 
 # --- shared synthetic path (both dialects) ---------------------------------
@@ -416,7 +417,7 @@ def fn_surrogate_key(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("o_orderdate", "yyyy-MM-dd"),
         F.col("o_totalprice").cast("string"),
     )
-    k = o.select(nat.alias("nat"), F.substring(F.sha2(nat, 256), 1, 16).alias("sk"))
+    k = o.select(nat.alias("nat"), sha16(nat).alias("sk"))
     return k.agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.countDistinct("nat").cast("long").alias("n_natural"),

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wri_data_processing_spark.catalog import table
+from wri_data_processing_spark.functions.text import salted_key, sha60, uniform30
 from wri_data_processing_spark.registry import query
 
 
@@ -1854,25 +1855,7 @@ def stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "y",
         "b",
-        (
-            F.conv(
-                F.substring(
-                    F.sha2(
-                        F.concat(
-                            F.col("event_id").cast("string"),
-                            F.lit(":"),
-                            F.col("b").cast("string"),
-                        ),
-                        256,
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % F.lit(1073741824).cast("long")
-        ).alias("u"),
+        uniform30(salted_key("", "event_id", "b")).alias("u"),
     )
     w = F.lit(6)
     for k, t in reversed(_BOOT_CDF_Q30):
@@ -2642,26 +2625,8 @@ def stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "y",
         F.explode(F.sequence(F.lit(0), F.lit(_PERM_B - 1))).alias("b"),
-        F.conv(
-            F.substring(
-                F.sha2(
-                    F.concat(
-                        F.lit("p:"),
-                        F.col("event_id").cast("string"),
-                        F.lit(":"),
-                        F.col("b").cast("string"),
-                    ),
-                    256,
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("u"),
-    ).withColumn("u", F.col("u") % F.lit(1073741824).cast("long"))
+        uniform30(salted_key("p:", "event_id", "b")).alias("u"),
+    )
     j = r.join(F.broadcast(obs), "event_type").select(
         "event_type",
         "b",
@@ -3071,18 +3036,7 @@ def stats_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = table(spark, sf_dir, "events")
     s = e.select(
-        (
-            F.conv(
-                F.substring(
-                    F.sha2(F.concat(F.lit("cal:"), F.col("event_id").cast("string")), 256),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % F.lit(1073741824).cast("long")
-        ).alias("u"),
+        uniform30(salted_key("cal:", "event_id")).alias("u"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("pos"),
     )
     b = s.select(F.expr("CAST(u * 10 div 1073741824 AS BIGINT)").alias("bin"), "u", "pos")
@@ -3149,18 +3103,7 @@ def stats_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = table(spark, sf_dir, "events")
     s = e.select(
-        (
-            F.conv(
-                F.substring(
-                    F.sha2(F.concat(F.lit("cal:"), F.col("event_id").cast("string")), 256),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % F.lit(1073741824).cast("long")
-        ).alias("u"),
+        uniform30(salted_key("cal:", "event_id")).alias("u"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("pos"),
     )
     th = s.select("u", "pos", F.explode(F.sequence(F.lit(1), F.lit(9))).alias("k"))
@@ -3770,18 +3713,7 @@ def stats_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = table(spark, sf_dir, "documents")
     ra = F.when(F.col("n_chars") >= 400, 1).otherwise(0)
-    u = (
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("kap:"), F.col("doc_id").cast("string")), 256),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % F.lit(1073741824).cast("long")
-    )
+    u = uniform30(salted_key("kap:", "doc_id"))
     rb = F.when(u * 5 < F.lit(1073741824), 1 - ra).otherwise(ra)
     r = docs.select(ra.alias("ra"), rb.alias("rb"))
     c = r.agg(
@@ -4118,18 +4050,7 @@ def stats_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one distinct-user shuffle, one 2-row aggregate, scalar algebra.
     """
     e = table(spark, sf_dir, "events").select("user_id").distinct()
-    u = (
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("srm:"), F.col("user_id").cast("string")), 256),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % F.lit(1073741824).cast("long")
-    )
+    u = uniform30(salted_key("srm:", "user_id"))
     b = e.select(F.when(u * 2 < F.lit(1073741824), 0).otherwise(1).alias("arm"))
     g = b.groupBy("arm").agg(F.count(F.lit(1)).cast("long").alias("n"))
     w = g.agg(
@@ -5863,18 +5784,7 @@ def stats_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wri_data_processing_spark.queries.eval_metrics import _lang_pred_col
 
     d = table(spark, sf_dir, "documents")
-    noise = (
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("fleiss:"), F.col("doc_id").cast("string")), 256),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 8
-    )
+    noise = sha60(salted_key("fleiss:", "doc_id")) % 8
     r = d.select(
         "doc_id",
         F.col("lang").alias("r1"),

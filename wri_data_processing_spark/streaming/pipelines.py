@@ -32,6 +32,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from wri_data_processing_spark.functions.text import sha16
+
 EVENTS_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -514,10 +516,7 @@ def segment_deduped(docs: DataFrame, n_tokens: int = 16) -> DataFrame:
     """
     from wri_data_processing_spark.queries.llm_segments import _segments
 
-    segs = _segments(docs, n_tokens)
-    return segs.withColumn(
-        "wh", F.substring(F.sha2(F.col("seg"), 256), 1, 16)
-    ).dropDuplicates(["wh"])
+    return _segments(docs, n_tokens).withColumn("wh", sha16("seg")).dropDuplicates(["wh"])
 
 
 _N_DRIFT_BINS = 20
