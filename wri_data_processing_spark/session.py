@@ -4,6 +4,20 @@ Local testing runs ``local[$SPARK_GRAFT_CPUS]``; on a real cluster the same
 confs apply (AQE, adaptive coalescing, skew-join handling). Session timezone
 is pinned to UTC so timestamp semantics are stable regardless of host tz
 (testdata parquet stores naive UTC instants).
+
+Python workers run through ``worker_daemon`` (``spark.python.daemon.module``).
+Spark puts its own archives first on the workers' ``PYTHONPATH``: the
+``$SPARK_HOME/python/lib`` zips and the ``spark-core`` jar. Every task's
+``worker_util.setup_spark_files`` calls ``importlib.invalidate_caches()``,
+and on CPython 3.11 that re-reads the whole central directory of every zip
+importer in the worker: 16 of them with Spark 4.1 (12 over ``pyspark.zip``,
+2 over the py4j zip, 2 over the jar), most of a trivial task's worker CPU.
+The daemon drops those archives before it forks any worker, so workers import
+the same installed pyspark as the driver. It falls back to the stock daemon on the
+archives when ``pyspark`` or ``py4j`` would not then resolve to a directory
+install of the same version. ``spark.executorEnv.PYTHONPATH`` carries the
+engine root, so the daemon and the engine modules that UDFs reference import
+whatever the driver's working directory is.
 """
 
 from __future__ import annotations
@@ -11,6 +25,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# The directory that holds the ``wri_data_processing_spark`` package.
+ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -55,6 +72,8 @@ def get_spark(
         # No carriage-return progress bars on stderr: they pollute captured
         # bench/driver output with nondeterministic noise.
         .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.python.daemon.module", "wri_data_processing_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", ENGINE_ROOT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
